@@ -489,7 +489,15 @@ final class Engine(val spark: SparkSession, rootPath: String,
     * stk_trancat`, sisdb.h:44-49): the reply is then the union of each
     * table's RENDERED payload rows tagged with a `table` column —
     * table schemas differ, so a multi-table get requires a rendered
-    * format (defaults to `j` when unspecified) and rejects `s`. */
+    * format (defaults to `j` when unspecified) and rejects `s`.
+    *
+    * Every get hands the store its subject match; a `range` get with
+    * `start ≥ 0` and no `ifprev` also hands it the days the range can
+    * touch ([[Engine.dayInRange]], the mapping `del` rewrites by), so
+    * only those day partitions are scanned. `ifprev` may fall back to
+    * an earlier day and last-row gets (`start:-1`) have no bound, so
+    * those scan every day. Either way a read whose predicate admits no
+    * staged row skips the hot tail's merge ([[TsStore.read]]). */
   def get(key: String, paramsJson: String = "{}"): DataFrame = {
     val (subject, tablePart) = splitKey(key)
     val tables = tablePart.split(",").map(_.trim).filter(_.nonEmpty)
@@ -554,29 +562,37 @@ final class Engine(val spark: SparkSession, rootPath: String,
     val timeField = sdb.mainIndex.map(_.name).getOrElse(
       throw new IllegalArgumentException(s"table '$table' has no main index"))
     val p = mapper.readTree(SdbSchema.quoteBareWords(paramsJson))
+    // (start, stop, ifprev)
+    val range = Option.when(p.has("range"))(p.get("range")).map { r =>
+      (if (r.has("start")) r.get("start").asLong(-1L) else -1L,
+        if (r.has("stop")) r.get("stop").asLong(0L) else 0L,
+        r.has("ifprev") && r.get("ifprev").asInt(0) == 1)
+    }
     // full sis_match_key vocabulary incl. comma lists
-    // (`get SH600600,SH600601.stk_day …`, sisdb.h:44-49)
-    val base = storeOf(table).read()
-      .filter(graft.store.KvStore.matchCond("subject", subject))
+    // (`get SH600600,SH600601.stk_day …`, sisdb.h:44-49); a ranged read
+    // without ifprev also names the days its range can touch
+    val matched = graft.store.KvStore.matchCond("subject", subject)
+    val days = range.collect { case (start, stop, false) if start >= 0 =>
+      val (lo, hi) = Query.rangeBounds(start, stop)
+      Engine.dayPredicate(sdb, timeField, lo, hi)
+    }
+    val base = storeOf(table).read(Some(days.fold(matched)(matched && _)))
 
     val toLong: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       c => Engine.indexAsLong(sdb, timeField, c)
 
-    val afterMatch =
-      if (p.has("range")) {
-        val r = p.get("range")
-        val start = if (r.has("start")) r.get("start").asLong(-1L) else -1L
-        val stop = if (r.has("stop")) r.get("stop").asLong(0L) else 0L
-        val ifprev = r.has("ifprev") && r.get("ifprev").asInt(0) == 1
+    val afterMatch = range match {
+      case Some((start, stop, ifprev)) =>
         Query.range(base, "subject", timeField, start, stop, ifprev,
           toLong = toLong)
-      } else if (p.has("where")) {
+      case None if p.has("where") =>
         val w = p.get("where")
         Query.whereOffset(base, "subject", timeField,
           if (w.has("start")) w.get("start").asLong(0L) else 0L,
           if (w.has("offset")) w.get("offset").asInt(0) else 0,
           toLong = toLong)
-      } else base
+      case None => base
+    }
 
     val afterCount =
       if (p.has("count") && p.get("count").asInt(0) != 0)
@@ -638,8 +654,9 @@ final class Engine(val spark: SparkSession, rootPath: String,
     val (subject, tablePart) = splitKey(pattern)
     val tables = tablePart.split(",").map(_.trim).filter(_.nonEmpty)
     require(tables.nonEmpty, s"pattern '$pattern' names no table")
-    tables.map(t =>
-        graft.store.KvStore.keys(storeOf(t).read(), "subject", subject))
+    tables.map(t => graft.store.KvStore.keys(
+        storeOf(t).read(Some(graft.store.KvStore.matchCond("subject", subject))),
+        "subject", subject))
       .reduce(_ unionByName _).distinct().orderBy("subject")
   }
 
@@ -1941,7 +1958,7 @@ final class Engine(val spark: SparkSession, rootPath: String,
       throw new IllegalArgumentException(s"unknown table '$table'"))
     val timeField = sdb.mainIndex.map(_.name).get
     graft.stream.Replay.replayFrameTo(
-      st.read(day = Some(day)), timeField, "subject", subs, slices,
+      st.read(Some(col("__day") === day)), timeField, "subject", subs, slices,
       table = table,
       sliceExpr = Some(Engine.indexAsLong(sdb, timeField, col(timeField))))
   }
@@ -2389,10 +2406,15 @@ object Engine {
   }
 
   /** Whether a day-partition VALUE can contain rows whose main index
-    * falls in [start, stop] — the pruning predicate `del` hands the
-    * store, so only intersecting partitions are rewritten. Mirrors
-    * [[indexAsLong]] per style. An unparseable day value returns true:
-    * rewritten-but-unchanged is correct, skipped-but-affected is not. */
+    * falls in [start, stop] — the one definition of which days a range
+    * touches: `del` rewrites only those partitions and a ranged `get`
+    * scans only those ([[dayPredicate]]). Mirrors [[indexAsLong]] per
+    * style. Timestamp days are [[dayOf]]'s dates in the session zone
+    * current at `set`, which the store does not record, so a day is
+    * taken to cover its instants in ANY zone: midnight to midnight
+    * widened by the largest zone offset (18 h) on each side. An
+    * unparseable day value returns true: read-or-rewritten but
+    * unchanged is correct, skipped-but-affected is not. */
   private[api] def dayInRange(sdb: SdbSchema.Sdb, timeField: String,
       start: Long, stop: Long): String => Boolean = {
     val f = sdb.fields.find(_.name == timeField).get
@@ -2401,16 +2423,24 @@ object Engine {
     f.style match {
       case 'D' => day => // DateType casts to "yyyy-MM-dd"; range is yyyymmdd
         num(day.replace("-", "")).forall(d => d >= start && d <= stop)
-      case 'T' | 'S' | 'W' => day => // "yyyy-MM-dd" (UTC); range is epoch ms
-        (try {
-          val d0 = java.time.LocalDate.parse(day)
-            .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
-          Some(d0)
-        } catch { case _: java.time.format.DateTimeParseException => None })
-          .forall(d0 => d0 + 86399999L >= start && d0 <= stop)
+      case 'T' | 'S' | 'W' => day => // "yyyy-MM-dd" in some zone; range is epoch ms
+        val maxOffset = java.time.ZoneOffset.MAX.getTotalSeconds * 1000L
+        (try Some(java.time.LocalDate.parse(day).toEpochDay * 86400000L)
+        catch { case _: java.time.format.DateTimeParseException => None })
+          .forall(d0 => d0 + 86399999L + maxOffset >= start && d0 - maxOffset <= stop)
       case _ => day => // day IS the index value as a string
         num(day).forall(d => d >= start && d <= stop)
     }
+  }
+
+  /** [[dayInRange]] as a predicate on the store's `__day` column, for
+    * [[graft.store.TsStore.read]]: on the cold side it prunes day
+    * partitions. A null day is kept. */
+  private[api] def dayPredicate(sdb: SdbSchema.Sdb, timeField: String,
+      start: Long, stop: Long): org.apache.spark.sql.Column = {
+    val inRange = dayInRange(sdb, timeField, start, stop)
+    udf((day: String) => day == null || inRange(day)).withName("dayInRange")(
+      col("__day").cast("string"))
   }
 
   /** The reference's update search tree (sisdb.h:50-53): `{f: v, ...}`

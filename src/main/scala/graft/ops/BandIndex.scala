@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions._
   *    when the accumulated newer data has grown to its size — never
   *    on a fixed every-N-batches cadence. Per-compaction cost is
   *    bounded by the merged runs' bytes, not the index's
-  *    ([[CompactStats]] is the evidence; [[graft.TierScale]]
-  *    measures the amortized slope).
+  *    ([[CompactStats]] is the evidence; PLANS.md, round-11 audit,
+  *    records the measured amortized slope).
   *  - '''Probe''': [[readForKeys]] takes the probe's key set (bounded
   *    driver-side: the batch's `bands × |batch|` bucket hashes, or the
   *    candidate ids of one batch — the same "batch fits on one
@@ -55,7 +55,7 @@ import org.apache.spark.sql.functions._
   * files instead of `O(index)` rows: a point lookup of one key opens
   * exactly one base file (ranges are disjoint, up to an equal boundary
   * key), and a small batch against a 10⁹-doc index opens the handful
-  * of files its keys land in. Measured in [[graft.IncScale]]:
+  * of files its keys land in. Measured (PLANS.md, IncScale table):
   * full-scan probe wall grows with index size G, pruned probe stays
   * flat with selected-file count capped by the batch's key count.
   */

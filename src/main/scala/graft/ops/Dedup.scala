@@ -128,7 +128,7 @@ object Dedup {
     // streams map-side with NO shuffle: a batch then costs one scan of
     // the banded index plus the matched buckets, and the slope vs
     // index size is scan speed, not shuffle speed (measured in
-    // PLANS.md via graft.IncScale). AQE usually picks this plan on its
+    // PLANS.md's IncScale table). AQE usually picks this plan on its
     // own; the hint makes it survive bad stats at 100 TB. The hint is
     // a CALLER promise, not a fact the engine can check cheaply —
     // a pipeline admitting unbounded batches passes broadcastBatch =

@@ -49,10 +49,8 @@ object Query {
       // latest record per subject: one shuffle, map-side combinable
       lastRows(df, subject, time, toLong)
     } else {
-      val cond =
-        if (stop == 0L) t === start
-        else if (stop == -1L) t >= start
-        else t.between(start, stop)
+      val (lo, hi) = rangeBounds(start, stop)
+      val cond = t.between(lo, hi)
       if (!ifprev) df.filter(cond)
       else {
         // rows matching, plus per-subject as-of fallback when none match
@@ -70,6 +68,12 @@ object Query {
       }
     }
   }
+
+  /** The inclusive [lo, hi] a `range` with `start ≥ 0` matches: stop
+    * 0 ⇒ [start, start], stop -1 ⇒ [start, Long.MaxValue], otherwise
+    * [start, stop]. */
+  def rangeBounds(start: Long, stop: Long): (Long, Long) =
+    (start, if (stop == 0L) start else if (stop == -1L) Long.MaxValue else stop)
 
   /** Exact-match (`where`) with record-offset navigation: the row(s)
     * `offset` records away from each exact match in time order.

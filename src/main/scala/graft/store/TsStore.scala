@@ -1911,18 +1911,7 @@ final class TsStore(
     // optimizer just to discover the batch is distributed would add
     // a full extra Catalyst pass to every streaming micro-batch set
     // (measured ~1.3-1.8x on the ingest drills when ungated).
-    def localOnly(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-        : Boolean = p match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        localOnly(pr.child)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        localOnly(f.child)
-      case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-        localOnly(s.child)
-      case _ => false
-    }
-    val total = (if (localOnly(stamped0.queryExecution.logical))
+    val total = (if (TsStore.localOnly(stamped0.queryExecution.logical))
         stamped0.queryExecution.optimizedPlan
       else stamped0.queryExecution.logical) match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
@@ -1974,12 +1963,27 @@ final class TsStore(
   }
 
   /** The read view: cold ∪ hot, solely-upsert resolved last-seq-wins.
-    * Day-filter BEFORE calling heavy ops so partition pruning fires on
-    * the cold side. */
-  def read(day: Option[String] = None): DataFrame = synchronized {
-    val coldPart = cold.map(tombFiltered)
-      .map(c => day.fold(c)(d => c.filter(col("__day") === d)))
-    val hotPart = hotUnion.map(h => day.fold(h)(d => h.filter(col("__day") === d)))
+    *
+    * `where` narrows the view to the rows a caller can see. It may name
+    * only the subject and `__day` columns, so it holds or fails for a
+    * whole upsert key, and it is applied to both sides BEFORE the
+    * merge:
+    *  - on the cold side its `__day` terms become PartitionFilters, so
+    *    the scan opens only the day partitions it admits;
+    *  - on a store with cold data, when every staged batch is
+    *    driver-local (the structural test `set` uses) and `where`
+    *    leaves none of their rows, the hot side is skipped and the read
+    *    is the plain cold scan: no window, no exchange. The optimizer
+    *    folds the filtered tail on the driver to decide this, with no
+    *    Spark job.
+    * A tail holding a distributed batch, or a staged row `where`
+    * admits, still resolves through the upsert; in the second case the
+    * driver-side fold is paid on top of it. */
+  def read(where: Option[org.apache.spark.sql.Column] = None): DataFrame =
+      synchronized {
+    val coldPart = cold.map(tombFiltered).map(c => where.fold(c)(keyFilter(c, _)))
+    val hotPart = hotUnion.map(h => where.fold(h)(keyFilter(h, _)))
+      .filterNot(h => where.nonEmpty && coldPart.nonEmpty && holdsNoRow(h))
     (coldPart, hotPart) match {
       case (Some(c), Some(h)) =>
         Write.upsert(c.drop("__seq"), h, subject, soleCols :+ "__day", time, "__seq")
@@ -2001,6 +2005,33 @@ final class TsStore(
         }
     }
   }
+
+  /** `df` filtered by a read predicate, which must name only upsert-key
+    * columns: pushed below the merge, a predicate on any other column
+    * could hide a newer staged row and expose the cold row it replaces. */
+  private def keyFilter(df: DataFrame,
+      where: org.apache.spark.sql.Column): DataFrame = {
+    val f = df.filter(where)
+    val refs = f.queryExecution.analyzed match {
+      case p: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        p.condition.references.toSeq.map(_.name)
+      case _ => Nil
+    }
+    require(refs.forall(Set(subject, "__day")),
+      s"read predicate may name only $subject and __day, got ${refs.distinct.mkString(", ")}")
+    f
+  }
+
+  /** True when the filtered tail `h` provably holds no row: every staged
+    * batch is driver-local and the optimizer folds `h` to an empty
+    * LocalRelation. */
+  private def holdsNoRow(h: DataFrame): Boolean =
+    hotFrames.forall(f => TsStore.localOnly(f.queryExecution.logical)) &&
+      (h.queryExecution.optimizedPlan match {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          l.data.isEmpty
+        case _ => false
+      })
 
   // resolved once: FileSystem.get consults Hadoop's global cache
   // under a lock on every call, and the commit path touches fs
@@ -2586,6 +2617,22 @@ object TsStore {
       cutMaxAgeMs: Long = 0L)
 
   private[store] val HistFile = "^v=(\\d+)\\.json$".r
+
+  /** Whether an UNANALYZED plan can only be rows that already live in
+    * it: a LocalRelation under projections, filters and aliases. A
+    * structural walk, so asking costs no optimizer pass. */
+  private[store] def localOnly(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+    p match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+      case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
+        localOnly(pr.child)
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        localOnly(f.child)
+      case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
+        localOnly(s.child)
+      case _ => false
+    }
 
   /** Placed-at stamp file written inside every version dir by the
     * committer ([[TsStore!.placeVersions]]): the placement instant as

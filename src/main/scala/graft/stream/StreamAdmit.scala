@@ -259,10 +259,10 @@ object StreamAdmit {
     // tail into a new sorted run and size-tiers the runs
     // (stepped-merge) once the tail crosses the threshold, and no-ops
     // (one listing) below it — per-batch write cost is bounded by the
-    // merged runs (O(log(index/batch)) amortized row rewrites,
-    // TierScale's measurement), never the whole index, so the stream
-    // never stalls on an O(index) rewrite no matter how large the
-    // admitted corpus grows. Content-preserving, so replay idempotence
+    // merged runs (O(log(index/batch)) amortized row rewrites, as
+    // measured in PLANS.md's round-11 audit), never the whole index,
+    // so the stream never stalls on an O(index) rewrite no matter how
+    // large the admitted corpus grows. Content-preserving, so replay idempotence
     // and the crash-window analysis above are untouched; a crash
     // mid-compact is healed by BandIndex.recover on the next probe.
     BandIndex.compact(ss, s"$indexRoot/sigs", "doc_id",

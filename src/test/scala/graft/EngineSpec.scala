@@ -41,6 +41,96 @@ class EngineSpec extends SparkSpec {
     assert(w.collect()(0).getAs[Double]("close") == 10.4)
   }
 
+  test("ranged gets prune day partitions and return the unpruned rows") {
+    import org.apache.spark.sql.functions._
+    val e = mkEngine
+    e.create("{tk:{fields:{t:[T,8],v:[F,8]}}}")
+    e.create(stkDay)
+    val ms = (d: Int, hms: String) => java.time.Instant
+      .parse(f"2024-01-$d%02dT${hms}Z").toEpochMilli
+    // every day of 2024-01-01..05 holds its first and last millisecond
+    for (d <- 1 to 5; hms <- Seq("00:00:00.000", "23:59:59.999"))
+      e.set("A.tk", f"""{"t":"2024-01-$d%02dT${hms}Z","v":$d.$d}""")
+    e.set("C.tk", """{"t":"2024-01-01T12:00:00Z","v":9.0}""")
+    for (d <- 4 to 8)
+      e.set("A.stk_day", f"""{"time":"2021-01-$d%02d","open":1.0,"close":$d.0,"vol":$d}""")
+    e.set("C.stk_day", """{"time":"2021-01-04","open":1.0,"close":9.0,"vol":9}""")
+    e.save("tk"); e.save("stk_day")
+    // (table, time field, subject, start, stop, ifprev)
+    val cases = Seq(
+      ("tk", "t", "A", ms(2, "00:00:00.000"), ms(4, "23:59:59.999"), false),
+      ("tk", "t", "A", ms(1, "23:59:59.999"), ms(5, "00:00:00.000"), false),
+      ("tk", "t", "A", ms(3, "23:59:59.999"), 0L, false),
+      ("tk", "t", "A", ms(4, "00:00:00.000"), -1L, false),
+      ("tk", "t", "A", ms(4, "00:00:00.000"), ms(2, "00:00:00.000"), false),
+      ("tk", "t", "C", ms(3, "00:00:00.000"), ms(4, "00:00:00.000"), true),
+      ("stk_day", "time", "A", 20210105L, 20210107L, false),
+      ("stk_day", "time", "A", 20210106L, 0L, false),
+      ("stk_day", "time", "A", 20210107L, -1L, false),
+      ("stk_day", "time", "A", 20210107L, 20210105L, false),
+      ("stk_day", "time", "C", 20210110L, 20210112L, true))
+    def check(): Unit = cases.foreach { case (table, tf, subj, start, stop, ifprev) =>
+      val got = e.get(s"$subj.$table",
+        s"{range:{start:$start,stop:$stop,ifprev:${if (ifprev) 1 else 0}}}")
+      val toLong: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+        if (table == "tk") unix_millis(_)
+        else c => (year(c) * 10000 + month(c) * 100 + dayofmonth(c)).cast("long")
+      val want = graft.ops.Query.range(
+        e.storeHandle(table).read().filter(col("subject") === subj),
+        "subject", tf, start, stop, ifprev, toLong = toLong)
+        .select(got.columns.map(col).toIndexedSeq: _*)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      assert(rows(got) == rows(want), s"$table $subj [$start, $stop] ifprev=$ifprev")
+      if (!ifprev && start >= 0) {
+        val plan = got.queryExecution.executedPlan.toString
+        assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*__day.*"),
+          s"no day pruning for $table [$start, $stop]:\n$plan")
+      }
+    }
+    assert(e.get("A.tk", s"{range:{start:${ms(2, "00:00:00.000")},stop:${ms(4, "23:59:59.999")}}}")
+      .count() == 6)
+    assert(e.get("C.stk_day", "{range:{start:20210110,stop:20210112,ifprev:1}}").count() == 1)
+    check()
+    // staged rows on the range's edge days, visible to the reads
+    e.set("A.tk", """{"t":"2024-01-04T23:59:59.999Z","v":40.0}""")
+    e.set("A.stk_day", """{"time":"2021-01-05","open":2.0,"close":50.0,"vol":5}""")
+    check()
+  }
+
+  test("ranged get and del find rows written under another session time zone") {
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    def inZone[A](z: String)(body: => A): A = {
+      spark.conf.set("spark.sql.session.timeZone", z)
+      try body finally spark.conf.set("spark.sql.session.timeZone", zone)
+    }
+    // (zone at set, zone at get/del): the day partitions are rendered
+    // at set time and the store does not record that zone
+    for ((writeZone, readZone) <- Seq(("UTC", "Asia/Shanghai"),
+        ("Asia/Shanghai", "UTC"), ("Pacific/Kiritimati", "Pacific/Pago_Pago"))) {
+      val e = mkEngine
+      e.create("{tk:{fields:{t:[T,8],v:[F,8]}}}")
+      // both rows fall on a different calendar day in the other zone
+      val iso = Seq("2024-01-01T23:30:00Z", "2024-01-02T00:30:00Z")
+      val at = iso.map(java.time.Instant.parse(_).toEpochMilli)
+      inZone(writeZone) {
+        iso.foreach(t => e.set("A.tk", s"""{"t":"$t","v":1.0}"""))
+        e.save("tk")
+      }
+      inZone(readZone) {
+        val ctx = s"set in $writeZone, read in $readZone"
+        at.foreach(ms =>
+          assert(e.get("A.tk", s"{range:{start:$ms,stop:0}}").count() == 1, ctx))
+        assert(e.get("A.tk", s"{range:{start:${at(0)},stop:${at(1)}}}").count() == 2, ctx)
+        assert(e.get("A.tk", s"{range:{start:${at(1)},stop:-1}}").count() == 1, ctx)
+        e.del("A.tk", s"{range:{start:${at(0)}}}") // a point delete
+        assert(e.get("A.tk", "{}").count() == 1, ctx)
+        e.del("A.tk", s"{range:{start:${at(1)},stop:-1}}")
+        assert(e.get("A.tk", "{}").count() == 0, ctx)
+      }
+    }
+  }
+
   test("same-time set replaces (time-indexed upsert), keys matching") {
     val e = mkEngine
     e.create(stkDay)

@@ -47,7 +47,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(hfs.exists(hp(s"$base/snap/__day=d2/__v=1")) &&
       !hfs.exists(hp(s"$base/snap/__day=d2/__v=2")))
     // day-pruned read still hits PartitionFilters through basePath
-    val pruned = snap.read(day = Some("d2"))
+    val pruned = snap.read(Some(col("__day") === "d2"))
     assert(pruned.count() == 2)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("__day"),

@@ -62,16 +62,63 @@ class StoreSpec extends SparkSpec {
     st.set((1 to 100).map(i => (s"K${i % 7}", i.toLong, i * 1.0,
       if (i % 2 == 0) "d1" else "d2")).toDF("code", "t", "v", "day"))
     st.save()
-    val pruned = st.read(day = Some("d1"))
+    val pruned = st.read(Some(col("__day") === "d1"))
     assert(pruned.count() == 50)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("__day"),
       s"no pruning in:\n$plan")
     st.pack(targetFiles = 1)
-    assert(st.read(day = Some("d1")).count() == 50) // unchanged answers
+    assert(st.read(Some(col("__day") === "d1")).count() == 50) // unchanged answers
     val files = new java.io.File(s"$root/__day=d1")
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(files == 1, s"pack left $files files")
+  }
+
+  test("read predicate: tail skipped only when no staged row can match") {
+    val root = Files.createTempDirectory("graft_store").toString + "/t_skip"
+    val st = mkStore(root)
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
+    def merges(df: org.apache.spark.sql.DataFrame) =
+      plan(df).contains("Window") || plan(df).contains("Exchange")
+    def vs(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("code", "t").collect().map(r =>
+        (r.getAs[String]("code"), r.getAs[Long]("t"), r.getAs[Double]("v"))).toSeq
+    val a = Some(col("code") === "A")
+    st.set(Seq(("A", 1L, 10.0, "d1"), ("A", 2L, 20.0, "d2"), ("B", 1L, 5.0, "d1"))
+      .toDF("code", "t", "v", "day"))
+    st.save()
+    // a staged row for the read's subject replaces the cold row on the
+    // same key before save, through the upsert
+    st.set(Seq(("A", 1L, 11.0, "d1")).toDF("code", "t", "v", "day"))
+    assert(merges(st.read(a)))
+    assert(vs(st.read(a)) == Seq(("A", 1L, 11.0), ("A", 2L, 20.0)))
+    st.save()
+    // a tail of other subjects only: the plain cold scan
+    st.set(Seq(("B", 2L, 6.0, "d2")).toDF("code", "t", "v", "day"))
+    assert(!merges(st.read(a)), s"tail not skipped:\n${plan(st.read(a))}")
+    assert(vs(st.read(a)) == Seq(("A", 1L, 11.0), ("A", 2L, 20.0)))
+    assert(vs(st.read(Some(col("code") === "B"))) == Seq(("B", 1L, 5.0), ("B", 2L, 6.0)))
+    // the day terms prune the cold scan on both branches
+    val d2 = Some(col("code") === "A" && col("__day") === "d2")
+    assert(vs(st.read(d2)) == Seq(("A", 2L, 20.0)))
+    assert(plan(st.read(d2)).matches("(?s).*PartitionFilters: \\[[^\\]]*__day.*"))
+    // a distributed batch in the tail keeps the upsert, answers unchanged
+    st.set(spark.range(2).select(lit("C").as("code"), col("id").as("t"),
+      lit(1.0).as("v"), lit("d1").as("day")))
+    assert(merges(st.read(a)))
+    assert(vs(st.read(a)) == Seq(("A", 1L, 11.0), ("A", 2L, 20.0)))
+    st.save()
+    // a dropped subject stays dead on the skip branch ...
+    st.dropSubject("A")
+    st.set(Seq(("B", 3L, 7.0, "d1")).toDF("code", "t", "v", "day"))
+    assert(!merges(st.read(a)) && st.read(a).count() == 0)
+    // ... and on the upsert branch (a visible staged row forces the merge)
+    val ab = Some(col("code").isin("A", "B"))
+    assert(merges(st.read(ab)))
+    assert(vs(st.read(ab)) == Seq(("B", 1L, 5.0), ("B", 2L, 6.0), ("B", 3L, 7.0)))
+    // a predicate on a non-key column would change upsert results
+    intercept[IllegalArgumentException](st.read(Some(col("v") > 0)))
   }
 
   test("bounded hot tail: batch cap auto-flushes; reads stay deduped-by-seq") {
@@ -135,7 +182,7 @@ class StoreSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).map(f => (f.getName, f.lastModified)).toSeq
     assert(d2After == d2Before, "clean day partition was rewritten by save")
     assert(st.read().count() == 3)
-    assert(st.read(day = Some("d2")).count() == 1)
+    assert(st.read(Some(col("__day") === "d2")).count() == 1)
   }
 
   test("deleteWhere rewrites ONLY the day partitions the range touches") {
