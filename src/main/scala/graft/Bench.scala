@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every declared query at the given SF and
   * prints one JSON line. Queries materialize through the `noop` sink —
@@ -9,28 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE rebuilds the full plan string on every adaptive update (for
-      // the UI plan description) even with the UI off; literal-heavy
-      // plans (inlined LSH planes/minhash coefs) make that real driver
-      // CPU. Cap it — 100k leaves the in-query plan-assert strings (o4,
-      // u1, j4: a few KB) untouched while bounding the MB-scale renders.
-      .config("spark.sql.maxPlanStringLength", "100000")
-      // The generated-class cache is a 100-entry LRU by default; this
-      // inventory's plan diversity (169 queries, lifecycle drills with
-      // per-stage shapes, iterative loops, streaming micro-batches)
-      // thrashes it, so repeated shapes recompile instead of hitting
-      // janino's cache. Scale-neutral: bounded by class count, not by
-      // data or core count.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = Harness.session(defaultCpus = 4)
     // warm-up outside the timings: session init, parquet footers, first
     // codegen — otherwise the alphabetically-first query absorbs it all
     Tables(spark, sfDir, "region").write.format("noop").mode("overwrite").save()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection utility: print the formatted physical plan and
   * wall time for named queries — the explain-then-iterate loop every
@@ -12,28 +11,7 @@ object Explain {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val runs = if (args.contains("--run")) args(args.indexOf("--run") + 1).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE rebuilds the full plan string on every adaptive update (for
-      // the UI plan description) even with the UI off; literal-heavy
-      // plans (inlined LSH planes/minhash coefs) make that real driver
-      // CPU. Cap it — 100k leaves the in-query plan-assert strings (o4,
-      // u1, j4: a few KB) untouched while bounding the MB-scale renders.
-      .config("spark.sql.maxPlanStringLength", "100000")
-      // The generated-class cache is a 100-entry LRU by default; this
-      // inventory's plan diversity (169 queries, lifecycle drills with
-      // per-stage shapes, iterative loops, streaming micro-batches)
-      // thrashes it, so repeated shapes recompile instead of hitting
-      // janino's cache. Scale-neutral: bounded by class count, not by
-      // data or core count.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = Harness.session(defaultCpus = 8)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"===== $name =====")

@@ -21,36 +21,40 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.functions", name)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_fnv64"),
-      info("graft_fnv64", "FNV-1a 64 of a string's UTF-8 bytes"),
-      (args: Seq[Expression]) => Fnv1a64Expr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash64"),
-      info("graft_simhash64", "simhash of an array<bigint> of token hashes"),
-      (args: Seq[Expression]) => SimHash64Expr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "dot product of two array<double>"),
-      (args: Seq[Expression]) => DotProductExpr(args(0), args(1))))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes", "distinct word-k-shingle xxhash64 values"),
-      (args: Seq[Expression]) => ShingleHashesExpr(args(0),
-        args(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("graft_normalize_text"),
-      info("graft_normalize_text", "trim+lower+collapse-whitespace"),
-      (args: Seq[Expression]) => NormalizeTextExpr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_winnow"),
-      info("graft_winnow", "winnowing fingerprints (text, k, window)"),
-      (args: Seq[Expression]) => WinnowExpr(args(0),
-        args(1).eval().asInstanceOf[Int], args(2).eval().asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("graft_token_fnv64"),
-      info("graft_token_fnv64", "per-token FNV-1a 64 hashes (portable)"),
-      (args: Seq[Expression]) => TokenFnv64Expr(args.head)))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_fnv"),
-      info("graft_shingle_fnv", "distinct word-k-shingle FNV-1a hashes (portable)"),
-      (args: Seq[Expression]) => ShingleHashesExpr(args(0),
-        args(1).eval().asInstanceOf[Int], fnv = true)))
+    // `usage` is what DESCRIBE FUNCTION shows (`_FUNC_` renders as the
+    // function name); `cls` is the expression class it reports
+    def fn(name: String, cls: Class[_], usage: String)(
+        build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, null, name, usage, "", "", "", "",
+          "", "", ""),
+        build))
+    def int(e: Expression): Int = e.eval().asInstanceOf[Int]
+
+    fn("graft_fnv64", classOf[Fnv1a64Expr],
+      "_FUNC_(str) - FNV-1a 64 of a string's UTF-8 bytes")(
+      a => Fnv1a64Expr(a.head))
+    fn("graft_simhash64", classOf[SimHash64Expr],
+      "_FUNC_(hashes) - simhash of an array<bigint> of token hashes")(
+      a => SimHash64Expr(a.head))
+    fn("graft_dot", classOf[DotProductExpr],
+      "_FUNC_(a, b) - dot product of two array<double>")(
+      a => DotProductExpr(a(0), a(1)))
+    fn("graft_shingle_hashes", classOf[ShingleHashesExpr],
+      "_FUNC_(text, k) - distinct word-k-shingle xxhash64 values")(
+      a => ShingleHashesExpr(a(0), int(a(1))))
+    fn("graft_normalize_text", classOf[NormalizeTextExpr],
+      "_FUNC_(text) - trim+lower+collapse-whitespace")(
+      a => NormalizeTextExpr(a.head))
+    fn("graft_winnow", classOf[WinnowExpr],
+      "_FUNC_(text, k, window) - winnowing fingerprints")(
+      a => WinnowExpr(a(0), int(a(1)), int(a(2))))
+    fn("graft_token_fnv64", classOf[TokenFnv64Expr],
+      "_FUNC_(text) - per-token FNV-1a 64 hashes (portable)")(
+      a => TokenFnv64Expr(a.head))
+    fn("graft_shingle_fnv", classOf[ShingleHashesExpr],
+      "_FUNC_(text, k) - distinct word-k-shingle FNV-1a hashes (portable)")(
+      a => ShingleHashesExpr(a(0), int(a(1)), fnv = true))
   }
 }

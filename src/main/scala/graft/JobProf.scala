@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Job-level profiler for a single declared query: counts every Spark
@@ -16,23 +15,7 @@ object JobProf {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val runs = if (args.contains("--run")) args(args.indexOf("--run") + 1).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "100000")
-      // The generated-class cache is a 100-entry LRU by default; this
-      // inventory's plan diversity (169 queries, lifecycle drills with
-      // per-stage shapes, iterative loops, streaming micro-batches)
-      // thrashes it, so repeated shapes recompile instead of hitting
-      // janino's cache. Scale-neutral: bounded by class count, not by
-      // data or core count.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = Harness.session(defaultCpus = 32)
     // warm-up mirrors Bench: session init, parquet footers, first codegen
     Tables(spark, sfDir, "region").write.format("noop").mode("overwrite").save()
 

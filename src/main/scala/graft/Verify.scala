@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,7 @@ object Verify {
     // optional 3rd arg: comma-separated subset for fast local checks;
     // the driver always passes 2 args → full run
     val subset = if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE rebuilds the full plan string on every adaptive update (for
-      // the UI plan description) even with the UI off; literal-heavy
-      // plans (inlined LSH planes/minhash coefs) make that real driver
-      // CPU. Cap it — 100k leaves the in-query plan-assert strings (o4,
-      // u1, j4: a few KB) untouched while bounding the MB-scale renders.
-      .config("spark.sql.maxPlanStringLength", "100000")
-      // The generated-class cache is a 100-entry LRU by default; this
-      // inventory's plan diversity (169 queries, lifecycle drills with
-      // per-stage shapes, iterative loops, streaming micro-batches)
-      // thrashes it, so repeated shapes recompile instead of hitting
-      // janino's cache. Scale-neutral: bounded by class count, not by
-      // data or core count.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = Harness.session(defaultCpus = 4)
     // The FNV-based oracles (tx4, d3, d2, d6, mm2) fold code points via
     // ascii(s[i]) in DuckDB while the Spark kernels fold UTF-8 BYTES;
     // the two agree only for pure-ASCII text. Assert that precondition

@@ -34,37 +34,33 @@ case class DotProductExpr(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    if (defined(x, y)) dot(x, y) else null
+  }
+
+  /** True iff the dot product is non-null: equal lengths, no null element. */
+  def defined(x: ArrayData, y: ArrayData): Boolean = {
     val n = x.numElements()
-    if (n != y.numElements()) return null
+    n == y.numElements() && MatrixKernel.hasSlice(x, 0, n) &&
+      MatrixKernel.hasSlice(y, 0, n)
+  }
+
+  /** Left-to-right Σ x(i)·y(i); callers check [[defined]] first. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
     var sum = 0.0
     var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      sum += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
+    while (i < n) { sum += x.getDouble(i) * y.getDouble(i); i += 1 }
     sum
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val sum = ctx.freshName("sum")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("dot", this, classOf[DotProductExpr].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $sum = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $sum += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $sum;
-         |}
-       """.stripMargin
-    })
+         |${ev.isNull} = !$ref.defined($a, $b);
+         |if (!${ev.isNull}) ${ev.value} = $ref.dot($a, $b);
+       """.stripMargin)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductExpr =

@@ -27,21 +27,15 @@ case class Fnv1a64Expr(child: Expression) extends UnaryExpression {
   }
 
   override def nullSafeEval(input: Any): Any =
-    Fnv1a64Expr.hash(input.asInstanceOf[UTF8String].getBytes)
+    hashOf(input.asInstanceOf[UTF8String])
+
+  /** Per-row kernel, shared by interpreted eval and generated code. */
+  def hashOf(s: UTF8String): Long = Fnv1a64Expr.hash(s.getBytes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      s"""
-         |byte[] $bytes = $c.getBytes();
-         |long $h = ${Fnv1a64Expr.Offset}L;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  $h = ($h ^ ($bytes[$i] & 0xffL)) * ${Fnv1a64Expr.Prime}L;
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
+      val ref = ctx.addReferenceObj("fnv1a64", this, classOf[Fnv1a64Expr].getName)
+      s"${ev.value} = $ref.hashOf($c);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Fnv1a64Expr =

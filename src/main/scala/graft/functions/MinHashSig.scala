@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** MinHash signature in one pass: for raw shingle hashes h (reduced
@@ -19,32 +18,35 @@ import org.apache.spark.sql.types._
   * stays < 2^62 (ANSI-safe).
   */
 case class MinHashSigExpr(child: Expression, coefsA: Seq[Long],
-    coefsB: Seq[Long], p: Long) extends UnaryExpression {
+    coefsB: Seq[Long], p: Long) extends MatrixKernel {
   require(coefsA.length == coefsB.length && coefsA.nonEmpty)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"minhash needs array<bigint>, got $t")
-  }
+  override protected def elementType: DataType = LongType
 
   private lazy val aArr = coefsA.toArray
   private lazy val bArr = coefsB.toArray
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
+  override protected def shape: Seq[(String, Any)] =
+    Seq("n" -> coefsA.length, "p" -> p)
+
+  override def nullSafeEval(input: Any): Any =
+    signature(input.asInstanceOf[ArrayData])
+
+  /** Per-row kernel, shared by interpreted eval and generated code. */
+  def signature(hs: ArrayData): ArrayData = {
+    val a = aArr
+    val b = bArr
     val n = hs.numElements()
-    val k = aArr.length
-    val out = new Array[Long](k)
+    val out = new Array[Long](a.length)
     var j = 0
-    while (j < k) {
+    while (j < a.length) {
       var best = p // sentinel: empty input → p (no shingle evidence)
       var i = 0
       while (i < n) {
         if (!hs.isNullAt(i)) {
           val hm = ((hs.getLong(i) % p) + p) % p // pmod of the raw hash
-          val v = (aArr(j) * hm + bArr(j)) % p
+          val v = (a(j) * hm + b(j)) % p
           if (v < best) best = v
         }
         i += 1
@@ -52,36 +54,11 @@ case class MinHashSigExpr(child: Expression, coefsA: Seq[Long],
       out(j) = best
       j += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
-    nullSafeCodeGen(ctx, ev, hs => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val out = ctx.freshName("out")
-      val best = ctx.freshName("best"); val v = ctx.freshName("v")
-      val hm = ctx.freshName("hm")
-      s"""
-         |int $n = $hs.numElements();
-         |long[] $out = new long[${aArr.length}];
-         |for (int $j = 0; $j < ${aArr.length}; $j++) {
-         |  long $best = ${p}L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (!$hs.isNullAt($i)) {
-         |      long $hm = (($hs.getLong($i) % ${p}L) + ${p}L) % ${p}L;
-         |      long $v = ($aRef[$j] * $hm + $bRef[$j]) % ${p}L;
-         |      if ($v < $best) $best = $v;
-         |    }
-         |  }
-         |  $out[$j] = $best;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genNullSafe(ctx, ev, "signature")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)

@@ -2,10 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Fused IVF/PQ kernels. The expression-DSL formulations they replace
@@ -19,10 +18,9 @@ import org.apache.spark.sql.types._
   * every row ran interpreted (round-20 baseline log:
   * "Whole-stage codegen disabled for plan … UnitCompiler.store").
   *
-  * Each kernel carries its constant matrix as a reference object
-  * (codegen via `addReferenceObj`, the [[MinHashSigExpr]] pattern):
-  * one compact plan node, stable generated source, and a tight
-  * primitive loop per row.
+  * Each kernel carries its constant matrix as a constructor argument
+  * and states its arithmetic once ([[MatrixKernel]]): one compact plan
+  * node, stable generated source, and a tight primitive loop per row.
   *
   * Semantics are replicated bit-for-bit from the struct formulations,
   * including the edge ordering rules the oracles mirror:
@@ -65,85 +63,31 @@ object PqKernels {
   * the struct chain it replaces resolved every edge to a concrete cell
   * (all-null scores → largest cell id). */
 case class IvfCellExpr(child: Expression, cents: Seq[Double],
-    offs: Seq[Double], dim: Int) extends UnaryExpression {
+    offs: Seq[Double], dim: Int) extends MatrixKernel {
   require(dim > 0 && cents.nonEmpty && cents.length % dim == 0 &&
     offs.length == cents.length / dim)
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"IVF cell assignment needs array<double>, got $t")
-  }
-
   private lazy val cArr = cents.toArray
   private lazy val oArr = offs.toArray
-  private lazy val n = offs.length
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return n - 1
-    val x = v.asInstanceOf[ArrayData]
-    val len = x.numElements()
-    if (len != dim) return n - 1
-    var i = 0
-    while (i < len) { if (x.isNullAt(i)) return n - 1; i += 1 }
-    var best = 0
-    var bestS = 0.0
-    var ci = 0
-    while (ci < n) {
-      var s = 0.0
-      val off = ci * dim
-      var k = 0
-      while (k < dim) { s += x.getDouble(k) * cArr(off + k); k += 1 }
-      s += oArr(ci)
-      if (ci == 0 || PqKernels.beats(true, s, ci, true, bestS, best)) {
-        best = ci; bestS = s
-      }
-      ci += 1
-    }
-    best
+  override protected def shape: Seq[(String, Any)] =
+    Seq("dim" -> dim, "n" -> offs.length)
+
+  override def eval(input: InternalRow): Any =
+    cell(child.eval(input).asInstanceOf[ArrayData])
+
+  /** Per-row kernel, shared by interpreted eval and generated code. */
+  def cell(x: ArrayData): Int = {
+    val n = oArr.length
+    if (!MatrixKernel.isDense(x, dim)) n - 1
+    else MatrixKernel.argmax(x, 0, cArr, oArr, 0, n, dim)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import Block._
-    val cRef = ctx.addReferenceObj("ivfCents", cArr, "double[]")
-    val oRef = ctx.addReferenceObj("ivfOffs", oArr, "double[]")
-    val c = child.genCode(ctx)
-    val x = c.value
-    val i = ctx.freshName("i"); val ci = ctx.freshName("ci")
-    val k = ctx.freshName("k"); val len = ctx.freshName("len")
-    val s = ctx.freshName("s"); val ok = ctx.freshName("ok")
-    val bestS = ctx.freshName("bestS"); val cmp = ctx.freshName("cmp")
-    ev.copy(isNull = FalseLiteral, code = c.code +
-      code"""
-         |int ${ev.value} = ${n - 1};
-         |if (!${c.isNull}) {
-         |  int $len = $x.numElements();
-         |  boolean $ok = ($len == $dim);
-         |  if ($ok) {
-         |    for (int $i = 0; $i < $len; $i++) {
-         |      if ($x.isNullAt($i)) { $ok = false; break; }
-         |    }
-         |  }
-         |  if ($ok) {
-         |    double $bestS = 0.0;
-         |    for (int $ci = 0; $ci < $n; $ci++) {
-         |      double $s = 0.0;
-         |      for (int $k = 0; $k < $dim; $k++) {
-         |        $s += $x.getDouble($k) * $cRef[$ci * $dim + $k];
-         |      }
-         |      $s += $oRef[$ci];
-         |      int $cmp = graft.functions.PqKernels.nanSafeCompareDoubles($s, $bestS);
-         |      if ($ci == 0 || $cmp > 0) { ${ev.value} = $ci; $bestS = $s; }
-         |      else if ($cmp == 0 && $ci > ${ev.value}) { ${ev.value} = $ci; $bestS = $s; }
-         |    }
-         |  }
-         |}
-       """.stripMargin)
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genTotal(ctx, ev, "cell")
 
   override protected def withNewChildInternal(newChild: Expression): IvfCellExpr =
     copy(child = newChild)
@@ -164,9 +108,10 @@ object IvfCellExpr {
   * the larger cell) — the fused form of
   * `slice(transform(sort_array(array(cellStructs…), desc), _.cell), 1, nprobe)`.
   * All-null scores (null/malformed vector) order cells id-descending,
-  * exactly as the struct sort did. */
+  * exactly as the struct sort did. The per-row work is
+  * O(nlist log nlist) on a handful of query rows. */
 case class IvfTopCellsExpr(child: Expression, cents: Seq[Double],
-    offs: Seq[Double], dim: Int, nprobe: Int) extends UnaryExpression {
+    offs: Seq[Double], dim: Int, nprobe: Int) extends MatrixKernel {
   require(dim > 0 && cents.nonEmpty && cents.length % dim == 0 &&
     offs.length == cents.length / dim && nprobe > 0)
 
@@ -175,72 +120,33 @@ case class IvfTopCellsExpr(child: Expression, cents: Seq[Double],
 
   private lazy val cArr = cents.toArray
   private lazy val oArr = offs.toArray
-  private lazy val n = offs.length
-  private lazy val take = math.min(nprobe, n)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"IVF cell probe needs array<double>, got $t")
-  }
+  override protected def shape: Seq[(String, Any)] =
+    Seq("dim" -> dim, "n" -> offs.length, "nprobe" -> nprobe)
 
-  private def rank(scores: Array[Double], hasScores: Boolean): Array[Int] = {
-    val ids = Array.tabulate(n)(identity)
-    val sorted = ids.sortWith { (a, b) =>
-      PqKernels.beats(hasScores, if (hasScores) scores(a) else 0.0, a,
-        hasScores, if (hasScores) scores(b) else 0.0, b)
-    }
-    sorted.take(take)
-  }
+  override def eval(input: InternalRow): Any =
+    topCells(child.eval(input).asInstanceOf[ArrayData])
 
-  override def eval(input: InternalRow): Any = evalWithValue(child.eval(input))
-
-  // the per-row work is O(nlist log nlist) on a handful of QUERY rows;
-  // a CodegenFallback would break the enclosing stage's whole-stage
-  // codegen, so generated code routes through [[evalWithValue]] on a
-  // reference to this expression instead (the sort is not worth
-  // open-coding in Java for query-side row counts).
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import Block._
-    val self = ctx.addReferenceObj("ivfTopCells", this,
-      classOf[IvfTopCellsExpr].getName)
-    val c = child.genCode(ctx)
-    val boxed = ctx.freshName("vecBoxed")
-    ev.copy(isNull = FalseLiteral, code = c.code +
-      code"""
-         |Object $boxed = ${c.isNull} ? null : (Object) ${c.value};
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  (org.apache.spark.sql.catalyst.util.ArrayData) $self.evalWithValue($boxed);
-       """.stripMargin)
-  }
-
-  /** Entry for generated code: same math as [[eval]] given the
-    * already-evaluated child value. */
-  def evalWithValue(v: Any): ArrayData = {
+  /** Per-row kernel, shared by interpreted eval and generated code. */
+  def topCells(x: ArrayData): ArrayData = {
+    val n = oArr.length
+    val has = MatrixKernel.isDense(x, dim)
     val scores = new Array[Double](n)
-    var has = v != null
     if (has) {
-      val x = v.asInstanceOf[ArrayData]
-      val len = x.numElements()
-      if (len != dim) has = false
-      else {
-        var i = 0
-        while (i < len && has) { if (x.isNullAt(i)) has = false; i += 1 }
-        if (has) {
-          var ci = 0
-          while (ci < n) {
-            var s = 0.0
-            val off = ci * dim
-            var k = 0
-            while (k < dim) { s += x.getDouble(k) * cArr(off + k); k += 1 }
-            scores(ci) = s + oArr(ci)
-            ci += 1
-          }
-        }
+      var ci = 0
+      while (ci < n) {
+        scores(ci) = MatrixKernel.dotRow(x, 0, cArr, ci * dim, dim) + oArr(ci)
+        ci += 1
       }
     }
-    new GenericArrayData(rank(scores, has))
+    val ranked = Array.tabulate(n)(identity).sortWith { (a, b) =>
+      PqKernels.beats(has, scores(a), a, has, scores(b), b)
+    }
+    UnsafeArrayData.fromPrimitiveArray(ranked.take(math.min(nprobe, n)))
   }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genTotal(ctx, ev, "topCells")
 
   override protected def withNewChildInternal(newChild: Expression): IvfTopCellsExpr =
     copy(child = newChild)
@@ -266,102 +172,38 @@ object IvfTopCellsExpr {
   * precomputed −|c|²/2 per (m, ksub). */
 case class PqEncodeExpr(child: Expression, books: Seq[Double],
     offs: Seq[Double], m: Int, ksub: Int, dsub: Int)
-    extends UnaryExpression {
+    extends MatrixKernel {
   require(m > 0 && ksub > 0 && dsub > 0 &&
     books.length == m * ksub * dsub && offs.length == m * ksub)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"PQ encode needs array<double>, got $t")
-  }
-
   private lazy val bArr = books.toArray
   private lazy val oArr = offs.toArray
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
+  override protected def shape: Seq[(String, Any)] =
+    Seq("m" -> m, "ksub" -> ksub, "dsub" -> dsub)
+
+  override def eval(input: InternalRow): Any =
+    encode(child.eval(input).asInstanceOf[ArrayData])
+
+  /** Per-row kernel, shared by interpreted eval and generated code. */
+  def encode(x: ArrayData): ArrayData = {
     val out = new Array[Int](m)
-    val x = if (v == null) null else v.asInstanceOf[ArrayData]
-    val len = if (x == null) -1 else x.numElements()
     var mi = 0
     while (mi < m) {
       val base = mi * dsub
-      var ok = x != null && base + dsub <= len
-      if (ok) {
-        var i = 0
-        while (i < dsub && ok) { if (x.isNullAt(base + i)) ok = false; i += 1 }
-      }
-      if (!ok) out(mi) = ksub - 1
-      else {
-        var best = 0
-        var bestS = 0.0
-        var k = 0
-        while (k < ksub) {
-          var s = 0.0
-          val boff = (mi * ksub + k) * dsub
-          var i = 0
-          while (i < dsub) { s += x.getDouble(base + i) * bArr(boff + i); i += 1 }
-          s += oArr(mi * ksub + k)
-          if (k == 0 || PqKernels.beats(true, s, k, true, bestS, best)) {
-            best = k; bestS = s
-          }
-          k += 1
-        }
-        out(mi) = best
-      }
+      out(mi) =
+        if (!MatrixKernel.hasSlice(x, base, dsub)) ksub - 1
+        else MatrixKernel.argmax(x, base, bArr, oArr, mi * ksub, ksub, dsub)
       mi += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import Block._
-    val bRef = ctx.addReferenceObj("pqBooks", bArr, "double[]")
-    val oRef = ctx.addReferenceObj("pqOffs", oArr, "double[]")
-    val c = child.genCode(ctx)
-    val x = c.value
-    val mi = ctx.freshName("mi"); val k = ctx.freshName("k")
-    val i = ctx.freshName("i"); val len = ctx.freshName("len")
-    val s = ctx.freshName("s"); val ok = ctx.freshName("ok")
-    val base = ctx.freshName("base"); val best = ctx.freshName("best")
-    val bestS = ctx.freshName("bestS"); val out = ctx.freshName("out")
-    val cmp = ctx.freshName("cmp")
-    ev.copy(isNull = FalseLiteral, code = c.code +
-      code"""
-         |int[] $out = new int[$m];
-         |int $len = ${c.isNull} ? -1 : ${x}.numElements();
-         |for (int $mi = 0; $mi < $m; $mi++) {
-         |  int $base = $mi * $dsub;
-         |  boolean $ok = !${c.isNull} && $base + $dsub <= $len;
-         |  if ($ok) {
-         |    for (int $i = 0; $i < $dsub; $i++) {
-         |      if ($x.isNullAt($base + $i)) { $ok = false; break; }
-         |    }
-         |  }
-         |  if (!$ok) { $out[$mi] = ${ksub - 1}; continue; }
-         |  int $best = 0;
-         |  double $bestS = 0.0;
-         |  for (int $k = 0; $k < $ksub; $k++) {
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $dsub; $i++) {
-         |      $s += $x.getDouble($base + $i) * $bRef[($mi * $ksub + $k) * $dsub + $i];
-         |    }
-         |    $s += $oRef[$mi * $ksub + $k];
-         |    int $cmp = graft.functions.PqKernels.nanSafeCompareDoubles($s, $bestS);
-         |    if ($k == 0 || $cmp > 0 || ($cmp == 0 && $k > $best)) {
-         |      $best = $k; $bestS = $s;
-         |    }
-         |  }
-         |  $out[$mi] = $best;
-         |}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin)
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genTotal(ctx, ev, "encode")
 
   override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =
     copy(child = newChild)
@@ -386,55 +228,48 @@ object PqEncodeExpr {
   * in (null codes array, null element, short array, out-of-range
   * code) → null out, matching the chain's null propagation. */
 case class PqAdcExpr(child: Expression, dt: Seq[Double], m: Int,
-    ksub: Int) extends UnaryExpression {
+    ksub: Int) extends MatrixKernel {
   require(m > 0 && ksub > 0 && dt.length == m * ksub)
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ADC needs array<int> codes, got $t")
-  }
+  override protected def elementType: DataType = IntegerType
 
   private lazy val dArr = dt.toArray
 
+  override protected def shape: Seq[(String, Any)] = Seq("m" -> m, "ksub" -> ksub)
+
   override def nullSafeEval(input: Any): Any = {
     val x = input.asInstanceOf[ArrayData]
-    if (x.numElements() < m) return null
-    var s = 0.0
+    if (hasCodes(x)) distance(x) else null
+  }
+
+  /** True iff the distance is non-null: at least m codes, the first m
+    * non-null and in `[0, ksub)`. */
+  def hasCodes(x: ArrayData): Boolean = {
+    if (x.numElements() < m) return false
     var mi = 0
     while (mi < m) {
-      if (x.isNullAt(mi)) return null
+      if (x.isNullAt(mi)) return false
       val code = x.getInt(mi)
-      if (code < 0 || code >= ksub) return null
-      s += dArr(mi * ksub + code)
+      if (code < 0 || code >= ksub) return false
       mi += 1
     }
+    true
+  }
+
+  /** Per-row kernel, shared by interpreted eval and generated code;
+    * callers check [[hasCodes]] first. */
+  def distance(x: ArrayData): Double = {
+    val d = dArr
+    var s = 0.0
+    var mi = 0
+    while (mi < m) { s += d(mi * ksub + x.getInt(mi)); mi += 1 }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dRef = ctx.addReferenceObj("adcTable", dArr, "double[]")
-    nullSafeCodeGen(ctx, ev, x => {
-      val mi = ctx.freshName("mi"); val s = ctx.freshName("s")
-      val code = ctx.freshName("code")
-      s"""
-         |if ($x.numElements() < $m) { ${ev.isNull} = true; }
-         |else {
-         |  double $s = 0.0;
-         |  for (int $mi = 0; $mi < $m; $mi++) {
-         |    if ($x.isNullAt($mi)) { ${ev.isNull} = true; break; }
-         |    int $code = $x.getInt($mi);
-         |    if ($code < 0 || $code >= $ksub) { ${ev.isNull} = true; break; }
-         |    $s += $dRef[$mi * $ksub + $code];
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genChecked(ctx, ev, "hasCodes", "distance")
 
   override protected def withNewChildInternal(newChild: Expression): PqAdcExpr =
     copy(child = newChild)
@@ -454,77 +289,45 @@ object PqAdcExpr {
   * left-to-right per plane in [[DotProductExpr]] order — the fused
   * form of `array(DotProductExpr(v, array(lit…)) * scale, …)`, which
   * planted k×dim Literal nodes in the scan plan and evaluated k
-  * separate expressions per row. Null semantics replicated: a null
-  * vector, a length mismatch, or a null element made every per-plane
-  * dot null, and `array()` of nulls carried them — here the output
-  * array is null in those cases (CreateArray of all-null doubles and
-  * a null array hash identically through the query's rounding +
-  * collect path ONLY if no such row exists; the corpus REQUIREs
-  * non-null fixed-dim embeddings and the oracle gate pins it). */
+  * separate expressions per row. A null vector, a length mismatch or
+  * a null element yields a null array: the per-plane dots of the
+  * replaced form were null in those cases, and this contract is pinned
+  * by the interpreted-vs-generated kernel suite. */
 case class RandomProjectExpr(child: Expression, planes: Seq[Double],
-    dim: Int, scale: Double) extends UnaryExpression {
+    dim: Int, scale: Double) extends MatrixKernel {
   require(dim > 0 && planes.nonEmpty && planes.length % dim == 0)
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"random projection needs array<double>, got $t")
-  }
-
   private lazy val pArr = planes.toArray
-  private lazy val k = planes.length / dim
+
+  override protected def shape: Seq[(String, Any)] =
+    Seq("dim" -> dim, "n" -> planes.length / dim, "scale" -> scale)
 
   override def nullSafeEval(input: Any): Any = {
     val x = input.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != dim) return null
-    var i = 0
-    while (i < n) { if (x.isNullAt(i)) return null; i += 1 }
-    val out = new Array[Double](k)
-    var j = 0
-    while (j < k) {
-      var s = 0.0
-      val off = j * dim
-      var i2 = 0
-      while (i2 < n) { s += x.getDouble(i2) * pArr(off + i2); i2 += 1 }
-      out(j) = s * scale
-      j += 1
-    }
-    new GenericArrayData(out)
+    if (projectable(x)) project(x) else null
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("jlPlanes", pArr, "double[]")
-    nullSafeCodeGen(ctx, ev, x => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $dim) { ${ev.isNull} = true; }
-         |else {
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  }
-         |  if (!${ev.isNull}) {
-         |    double[] $out = new double[$k];
-         |    for (int $j = 0; $j < $k; $j++) {
-         |      double $s = 0.0;
-         |      for (int $i = 0; $i < $dim; $i++) {
-         |        $s += $x.getDouble($i) * $pRef[$j * $dim + $i];
-         |      }
-         |      $out[$j] = $s * $scale;
-         |    }
-         |    ${ev.value} =
-         |      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         |  }
-         |}
-       """.stripMargin
-    })
+  /** True iff the projection is non-null: exactly dim non-null elements. */
+  def projectable(x: ArrayData): Boolean = MatrixKernel.isDense(x, dim)
+
+  /** Per-row kernel, shared by interpreted eval and generated code;
+    * callers check [[projectable]] first. */
+  def project(x: ArrayData): ArrayData = {
+    val p = pArr
+    val out = new Array[Double](p.length / dim)
+    var j = 0
+    while (j < out.length) {
+      out(j) = MatrixKernel.dotRow(x, 0, p, j * dim, dim) * scale
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    genChecked(ctx, ev, "projectable", "project")
 
   override protected def withNewChildInternal(newChild: Expression): RandomProjectExpr =
     copy(child = newChild)

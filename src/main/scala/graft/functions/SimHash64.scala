@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 /** SimHash signature from an array of 64-bit token hashes: bit i of the
   * output is set iff more token hashes have bit i set than unset.
-  * Single O(64·n) pass in generated code — the expression-DSL
+  * Single O(64·n) pass per row — the expression-DSL
   * formulation would be 64 separate folds over the array and defeats
   * whole-stage codegen.
   *
@@ -23,8 +23,11 @@ case class SimHash64Expr(child: Expression) extends UnaryExpression {
     case t => TypeCheckResult.TypeCheckFailure(s"simhash64 needs array<bigint>, got $t")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    simhash(input.asInstanceOf[ArrayData])
+
+  /** Per-row kernel, shared by interpreted eval and generated code. */
+  def simhash(arr: ArrayData): Long = {
     val counts = new Array[Int](64)
     var i = 0
     val n = arr.numElements()
@@ -45,32 +48,13 @@ case class SimHash64Expr(child: Expression) extends UnaryExpression {
       if (counts(b) > 0) out |= (1L << b)
       b += 1
     }
-    java.lang.Long.valueOf(out)
+    out
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, arr => {
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      s"""
-         |int[] $counts = new int[64];
-         |for (int $i = 0; $i < $arr.numElements(); $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    long $h = $arr.getLong($i);
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      if ((($h >>> $b) & 1L) != 0L) $counts[$b]++; else $counts[$b]--;
-         |    }
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($counts[$b] > 0) $out |= (1L << $b);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
+      val ref = ctx.addReferenceObj("simhash", this, classOf[SimHash64Expr].getName)
+      s"${ev.value} = $ref.simhash($arr);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =

@@ -51,6 +51,14 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(sf == 2)
   }
 
+  test("DESCRIBE FUNCTION EXTENDED shows the expression class and usage") {
+    val rows = spark.sql("DESCRIBE FUNCTION EXTENDED graft_dot")
+      .collect().map(_.getString(0)).toSeq
+    assert(rows.contains("Class: graft.functions.DotProductExpr"), rows)
+    assert(rows.contains("Usage: graft_dot(a, b) - dot product of two array<double>"),
+      rows)
+  }
+
   test("plain sessions do not see the injected functions") {
     val err = intercept[Exception] {
       SparkTestSession.spark.sql("SELECT graft_fnv64('a')").collect()

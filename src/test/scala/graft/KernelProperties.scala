@@ -20,7 +20,7 @@ object KernelProperties extends Properties("graft.kernels") {
     1 -> Gen.oneOf("日本語中文éüñ".toSeq))
   private val token = Gen.nonEmptyListOf(tokenChar).map(_.mkString)
   private val ws = Gen.nonEmptyListOf(Gen.oneOf(wsChars)).map(_.mkString)
-  private val textGen: Gen[String] = for {
+  private[graft] val textGen: Gen[String] = for {
     n <- Gen.choose(0, 12)
     toks <- Gen.listOfN(n, token)
     seps <- Gen.listOfN(n + 1, Gen.oneOf(ws, Gen.const("")))

@@ -304,6 +304,19 @@ class SimilaritySpec extends SparkSpec {
     assert(mean > 0.7 && mean < 1.3, s"JL mean distortion $mean")
   }
 
+  test("randomProjection: null, null-element and wrong-length embeddings project to null") {
+    import spark.implicits._
+    val planes = graft.functions.VectorFunctions.randomPlanes(4, 3, seed = 42L)
+    val rows = Seq[(Long, Seq[java.lang.Double])](
+      (1L, Seq(1.0, 2.0, 3.0)), (2L, Seq(1.0, null, 3.0)), (3L, Seq(1.0, 2.0)),
+      (4L, Seq(1.0, 2.0, 3.0, 4.0)), (5L, null))
+    val got = Similarity.randomProjection(rows.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", planes)
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[Double](1))).toMap
+    assert(got(1L).map(_.length).contains(4))
+    assert(Seq(2L, 3L, 4L, 5L).forall(got(_).isEmpty), got)
+  }
+
   test("PQ: encode matches driver argmin, ADC = table lookups, full-shortlist search = exact") {
     val books = Similarity.trainPqCodebooks(emb, "embedding",
       m = 4, ksub = 8, seed = 5L)
